@@ -23,12 +23,16 @@ from __future__ import annotations
 import os
 import re
 import shutil
+import tempfile
+import weakref
+from collections import ChainMap
+from collections.abc import Mapping
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.typemap import ch_type_to_spark
+from .functions.typemap import ch_type_to_spark, spark_type_to_ch
 from .operators import final as final_op
 from .plans.builder import build
 from .plans.statements import (
@@ -222,14 +226,207 @@ def _reference_defaults() -> dict[str, object]:
     return REFERENCE_DEFAULTS
 
 
+# settings that shape only a statement's final result (applied by
+# plans.builder.build after the whole query is planned)
+_RESULT_SETTINGS = frozenset({"limit", "offset", "max_result_rows"})
+
+
+def _metas(s: "ChSession"):
+    """(database, name, meta) for every catalog entry, sorted."""
+    for db in sorted(s.databases):
+        for name, meta in sorted(s.databases[db].items()):
+            yield db, name, meta
+
+
+# Catalog-backed system.* tables: name → (schema, rows(session)). A
+# statement builds only the ones it names; the builder answers
+# system.one/numbers/functions itself.
+_SYSTEM_TABLES: dict[str, tuple[str, object]] = {
+    "tables": (
+        "database string, name string, engine string,"
+        " sorting_key string, partition_key string",
+        lambda s: [(db, n, m.engine, ", ".join(m.order_by),
+                    m.partition_by or "") for db, n, m in _metas(s)]),
+    "columns": (
+        "database string, table string, name string, type string,"
+        " position int",
+        lambda s: [(db, n, cn, ct, pos) for db, n, m in _metas(s)
+                   for pos, (cn, ct) in enumerate(m.columns, 1)]),
+    "databases": ("name string",
+                  lambda s: [(d,) for d in sorted(s.databases)]),
+    "settings": (
+        "name string, value string, changed int",
+        lambda s: [(k, str(v), int(k in s.settings)) for k, v in sorted(
+            {**_reference_defaults(), **_SETTING_DEFAULTS,
+             **s.settings}.items())]),
+    "dictionaries": (
+        "database string, name string, layout string, key string,"
+        " source string, loaded boolean",
+        lambda s: sorted((d.database, d.name, d.layout, d.key,
+                          d.source_table, d.cache is not None)
+                         for d in s.dictionaries.values())),
+    "query_log": (
+        "query string, type string, query_duration_ms double,"
+        " event_time timestamp",
+        lambda s: list(s.query_log)),
+    "parts": (
+        "database string, table string, name string, rows bigint,"
+        " bytes_on_disk bigint, active boolean",
+        lambda s: s._parts_rows()),
+    # one row per in-flight query: this session's current statement
+    # (the reference lists live queries; a local engine always has
+    # exactly the one)
+    "processes": ("user string, query string",
+                  lambda s: [("default", "")]),
+    "formats": ("name string, is_input int, is_output int",
+                lambda s: sorted((n, 1, 1) for n in _format_names())),
+    "table_functions": ("name string", lambda s: [(n,) for n in sorted((
+        "numbers", "numbers_mt", "view", "one", "zeros", "zeros_mt",
+        "file", "url", "values", "format", "generateRandom", "merge",
+        "input", "null", "dsirSelect", "packSequences", "domainMix"))]),
+    "aggregate_function_combinators": ("name string", lambda s: [
+        (n,) for n in sorted((
+            "If", "Array", "ArrayIf", "Map", "SimpleState", "State",
+            "Merge", "MergeState", "ForEach", "Distinct", "OrDefault",
+            "OrNull", "Resample", "ArgMin", "ArgMax"))]),
+    # mutations apply synchronously here (each ALTER rewrite completes
+    # before execute() returns), so every row is done
+    "mutations": (
+        "database string, table string, mutation_id string,"
+        " command string, is_done int",
+        lambda s: list(s.mutations)),
+    # no background merge pool — Spark rewrites are the merges
+    "merges": ("database string, table string, elapsed double,"
+               " progress double", lambda s: []),
+    "clusters": (
+        "cluster string, shard_num int, shard_weight int,"
+        " replica_num int, host_name string, host_address string,"
+        " port int, is_local int",
+        lambda s: [("default", 1, 1, 1, "localhost", "127.0.0.1", 9000,
+                    1)]),
+    "disks": (
+        "name string, path string, free_space bigint,"
+        " total_space bigint, type string",
+        lambda s: [("default", s.warehouse, _disk_free(s.warehouse),
+                    _disk_total(s.warehouse), "Local")]),
+    "storage_policies": (
+        "policy_name string, volume_name string, volume_priority int,"
+        " disks array<string>",
+        lambda s: [("default", "default", 0, ["default"])]),
+    "macros": ("macro string, substitution string", lambda s: []),
+    "users": ("name string, storage string, auth_type string",
+              lambda s: [("default", "local_directory", "no_password")]),
+    "roles": ("name string, id string, storage string", lambda s: []),
+    "grants": (
+        "user_name string, role_name string, access_type string,"
+        " database string, table string, is_partial_revoke int,"
+        " grant_option int",
+        lambda s: [("default", None, "ALL", None, None, 0, 1)]),
+    "events": (
+        "event string, value bigint, description string",
+        lambda s: [("Query", len(s.query_log), "Number of queries started"),
+                   ("FailedQuery",
+                    sum(1 for q in s.query_log
+                        if q[1] == "ExceptionWhileProcessing"),
+                    "Number of failed queries")]),
+    "metrics": ("metric string, value bigint, description string",
+                lambda s: [("Query", 0, "Queries executing right now"),
+                           ("TCPConnection", 0, "TCP connections")]),
+    "asynchronous_metrics": (
+        "metric string, value double",
+        lambda s: [("Uptime", 0.0), ("MemoryResident", 0.0)]),
+    "replicas": ("database string, table string, is_leader int,"
+                 " is_readonly int, absolute_delay bigint", lambda s: []),
+    "detached_parts": (
+        "database string, table string, partition_id string",
+        lambda s: [(db, tbl, part)
+                   for (db, tbl), parts in s.detached_parts.items()
+                   for part in parts]),
+}
+
+
+class _Catalog(Mapping):
+    """The tables one statement can name, each built only when named.
+
+    Keys are ``db.name`` for every database, the bare name for the
+    first of ``dbs`` that has it (the current database; a view body
+    also falls back to default), and ``system.<name>`` for the
+    registry above. Parameterized views are not entries: the builder
+    binds them at ``v(p = x)`` call sites. ``building`` holds the views
+    in flight: naming one again is a cycle, and merge() skips them.
+    Built frames live as long as the statement's mapping, never across
+    statements."""
+
+    def __init__(self, session: "ChSession", dbs: tuple[str, ...],
+                 building: frozenset = frozenset()):
+        self._session, self._building = session, building
+        self._dbs = tuple(d for d in dict.fromkeys(dbs)
+                          if d in session.databases)
+        self._built: dict[str, DataFrame] = {}
+
+    @staticmethod
+    def _visible(meta: TableMeta) -> bool:
+        return not (meta.is_view and _ast_has_params(meta.view_query))
+
+    def _entry(self, key: str) -> "TableMeta | str | None":
+        """The TableMeta a key names, the system table's name, or None."""
+        dbs = self._session.databases
+        if key.startswith("system.") and key[7:] in _SYSTEM_TABLES:
+            return key[7:]
+        for db in self._dbs:
+            meta = dbs[db].get(key)
+            if meta is not None:
+                return meta if self._visible(meta) else None
+        for db, tables in dbs.items():
+            if key.startswith(db + ".") and key[len(db) + 1:] in tables:
+                meta = tables[key[len(db) + 1:]]
+                return meta if self._visible(meta) else None
+        return None
+
+    def __contains__(self, key) -> bool:
+        return isinstance(key, str) and self._entry(key) is not None
+
+    def __getitem__(self, key: str) -> DataFrame:
+        if key not in self._built:
+            entry = self._entry(key)
+            if entry is None:
+                raise KeyError(key)
+            s = self._session
+            if isinstance(entry, str):
+                schema, rows = _SYSTEM_TABLES[entry]
+                self._built[key] = s.spark.createDataFrame(rows(s), schema)
+            else:
+                self._built[key] = s._read(entry, self._building)
+        return self._built[key]
+
+    def __iter__(self):
+        live = [(db, name) for db, tables in
+                self._session.databases.items()
+                for name, meta in tables.items()
+                if self._visible(meta) and (db, name) not in self._building]
+        keys = [f"{db}.{name}" for db, name in live]
+        keys += [name for db, name in live if db in self._dbs]
+        keys += [f"system.{n}" for n in _SYSTEM_TABLES]
+        return iter(dict.fromkeys(keys))
+
+    def __len__(self) -> int:
+        return sum(1 for _ in self)
+
+
 class ChSession:
     """A ClickHouse-flavored session over Spark: databases, tables,
     settings, and the statement dispatch loop."""
 
     def __init__(self, spark: SparkSession, warehouse: str | None = None):
         self.spark = spark
-        self.warehouse = warehouse or os.path.join(
-            os.getcwd(), ".chspark_warehouse")
+        if warehouse is None:
+            # a private directory, so nothing is written into the working
+            # directory. It is removed with the SparkSession, not with
+            # this object: a DataFrame that outlives the ChSession still
+            # scans it (and holds the SparkSession alive).
+            warehouse = tempfile.mkdtemp(prefix="chspark-wh-")
+            weakref.finalize(spark, shutil.rmtree, warehouse, True)
+        self.warehouse = warehouse
         os.makedirs(self.warehouse, exist_ok=True)
         self.databases: dict[str, dict[str, TableMeta]] = {"default": {}}
         self.current_db = "default"
@@ -272,12 +469,7 @@ class ChSession:
             if isinstance(node, OutputClause):
                 return self._output(node)
             if isinstance(node, (SelectQuery, UnionQuery)):
-                return build(self.spark, node, self._tables(),
-                             self._engines(),
-                             params=params, settings=self.settings,
-                             udfs=self.udfs,
-                             dictionaries=self.dictionaries,
-                             views=self._param_views())
+                return self._build(node, params=params)
             return self._dispatch_node(node)
         except Exception:
             status = "ExceptionWhileProcessing"
@@ -344,8 +536,7 @@ class ChSession:
                           sample_by: str | None = None) -> None:
         """Expose an existing DataFrame (e.g. testdata parquet) as a table."""
         meta = TableMeta(name, self.current_db,
-                         [(f.name, _spark_to_ch(f.dataType.simpleString()))
-                          for f in df.schema.fields],
+                         _ch_columns(df),
                          engine="External", memory_df=df,
                          order_by=order_by or [], sample_by=sample_by)
         if version:
@@ -367,24 +558,6 @@ class ChSession:
                              f".{table}")
         return meta
 
-    def _tables(self) -> dict[str, DataFrame]:
-        out = {}
-        # db-qualified keys for EVERY database so FROM otherdb.t resolves
-        # to the right table even when the current db has a same-named one
-        # (parameterized views can only build at call time — they resolve
-        # through the view-AST path, not here)
-        for db in self.databases:
-            for name, meta in self._db(db).items():
-                if meta.is_view and _ast_has_params(meta.view_query):
-                    continue
-                out[f"{db}.{name}"] = self._read(meta)
-        for name, meta in self._db().items():
-            if meta.is_view and _ast_has_params(meta.view_query):
-                continue
-            out[name] = self._read(meta)
-        out.update(self._system_tables())
-        return out
-
     def _param_views(self) -> dict[str, object]:
         """name → view AST for PARAMETERIZED views (query parameters in
         the body) — the builder binds them at `v(p = x)` call sites."""
@@ -396,140 +569,6 @@ class ChSession:
                     if db == self.current_db:
                         out[name] = meta.view_query
         return out
-
-    def _system_tables(self) -> dict[str, DataFrame]:
-        """Catalog-backed system.* tables (db-qualified keys so they never
-        shadow user tables; builder resolves system.one/numbers/functions
-        itself). Cached on a catalog fingerprint — createDataFrame per
-        statement is measurable driver overhead."""
-        trows, crows = [], []
-        for db in sorted(self.databases):
-            for name, meta in sorted(self._db(db).items()):
-                trows.append((db, name, meta.engine,
-                              ", ".join(meta.order_by),
-                              meta.partition_by or ""))
-                for pos, (cn, ct) in enumerate(meta.columns, 1):
-                    crows.append((db, name, cn, ct, pos))
-        drows = [(d.database, d.name, d.layout, d.key, d.source_table,
-                  d.cache is not None)
-                 for d in self.dictionaries.values()]
-        prows = self._parts_rows()
-        fp = (tuple(trows), tuple(crows), tuple(drows), tuple(sorted(
-            (k, str(v)) for k, v in self.settings.items())),
-            len(self.query_log), tuple(prows), len(self.mutations),
-            tuple(sorted((k, tuple(sorted(v)))
-                         for k, v in self.detached_parts.items())))
-        if getattr(self, "_sys_fp", None) == fp:
-            return self._sys_cache
-        self._sys_fp, self._sys_cache = fp, {
-            "system.tables": self.spark.createDataFrame(
-                trows or [], "database string, name string, engine string,"
-                " sorting_key string, partition_key string"),
-            "system.columns": self.spark.createDataFrame(
-                crows or [], "database string, table string, name string,"
-                " type string, position int"),
-            "system.databases": self.spark.createDataFrame(
-                [(d,) for d in sorted(self.databases)], "name string"),
-            "system.settings": self.spark.createDataFrame(
-                [(k, str(v), int(k in self.settings)) for k, v in sorted(
-                    {**_reference_defaults(), **_SETTING_DEFAULTS,
-                     **self.settings}.items())],
-                "name string, value string, changed int"),
-            "system.dictionaries": self.spark.createDataFrame(
-                sorted(drows) or [], "database string, name string,"
-                " layout string, key string, source string,"
-                " loaded boolean"),
-            "system.query_log": self.spark.createDataFrame(
-                list(self.query_log) or [], "query string, type string,"
-                " query_duration_ms double, event_time timestamp"),
-            "system.parts": self.spark.createDataFrame(
-                prows or [], "database string, table string, name string,"
-                " rows bigint, bytes_on_disk bigint, active boolean"),
-            # one row per in-flight query: this session's current
-            # statement (the reference lists live queries; a local
-            # engine always has exactly the one)
-            "system.processes": self.spark.createDataFrame(
-                [("default", "")], "user string, query string"),
-            "system.formats": self.spark.createDataFrame(
-                sorted((n, 1, 1) for n in _format_names()),
-                "name string, is_input int, is_output int"),
-            "system.table_functions": self.spark.createDataFrame(
-                [(n,) for n in sorted(
-                    ("numbers", "numbers_mt", "view", "one", "zeros",
-                     "zeros_mt", "file", "url", "values", "format",
-                     "generateRandom", "merge", "input", "null",
-                     "dsirSelect", "packSequences", "domainMix"))],
-                "name string"),
-            "system.aggregate_function_combinators":
-                self.spark.createDataFrame(
-                    [(n,) for n in sorted(
-                        ("If", "Array", "ArrayIf", "Map", "SimpleState",
-                         "State", "Merge", "MergeState", "ForEach",
-                         "Distinct", "OrDefault", "OrNull", "Resample",
-                         "ArgMin", "ArgMax"))],
-                    "name string"),
-            # mutations apply synchronously here (each ALTER rewrite
-            # completes before execute() returns), so every row is done
-            "system.mutations": self.spark.createDataFrame(
-                list(getattr(self, "mutations", [])) or [],
-                "database string, table string, mutation_id string,"
-                " command string, is_done int"),
-            # no background merge pool — Spark rewrites are the merges
-            "system.merges": self.spark.createDataFrame(
-                [], "database string, table string, elapsed double,"
-                " progress double"),
-            "system.clusters": self.spark.createDataFrame(
-                [("default", 1, 1, 1, "localhost", "127.0.0.1", 9000, 1)],
-                "cluster string, shard_num int, shard_weight int,"
-                " replica_num int, host_name string, host_address string,"
-                " port int, is_local int"),
-            "system.disks": self.spark.createDataFrame(
-                [("default", self.warehouse,
-                  _disk_free(self.warehouse), _disk_total(self.warehouse),
-                  "Local")],
-                "name string, path string, free_space bigint,"
-                " total_space bigint, type string"),
-            "system.storage_policies": self.spark.createDataFrame(
-                [("default", "default", 0, ["default"])],
-                "policy_name string, volume_name string,"
-                " volume_priority int, disks array<string>"),
-            "system.macros": self.spark.createDataFrame(
-                [], "macro string, substitution string"),
-            "system.users": self.spark.createDataFrame(
-                [("default", "local_directory", "no_password")],
-                "name string, storage string, auth_type string"),
-            "system.roles": self.spark.createDataFrame(
-                [], "name string, id string, storage string"),
-            "system.grants": self.spark.createDataFrame(
-                [("default", None, "ALL", None, None, 0, 1)],
-                "user_name string, role_name string, access_type string,"
-                " database string, table string,"
-                " is_partial_revoke int, grant_option int"),
-            "system.events": self.spark.createDataFrame(
-                [("Query", len(self.query_log),
-                  "Number of queries started"),
-                 ("FailedQuery",
-                  sum(1 for q in self.query_log
-                      if q[1] == "ExceptionWhileProcessing"),
-                  "Number of failed queries")],
-                "event string, value bigint, description string"),
-            "system.metrics": self.spark.createDataFrame(
-                [("Query", 0, "Queries executing right now"),
-                 ("TCPConnection", 0, "TCP connections")],
-                "metric string, value bigint, description string"),
-            "system.asynchronous_metrics": self.spark.createDataFrame(
-                [("Uptime", 0.0), ("MemoryResident", 0.0)],
-                "metric string, value double"),
-            "system.replicas": self.spark.createDataFrame(
-                [], "database string, table string, is_leader int,"
-                " is_readonly int, absolute_delay bigint"),
-            "system.detached_parts": self.spark.createDataFrame(
-                [(db, tbl, part)
-                 for (db, tbl), parts in self.detached_parts.items()
-                 for part in parts] or [],
-                "database string, table string, partition_id string"),
-        }
-        return self._sys_cache
 
     def _engines(self) -> dict[str, dict]:
         out = {}
@@ -561,47 +600,41 @@ class ChSession:
                         out[name] = info
         return out
 
+    def _build(self, ast, overrides: dict | None = None,
+               params: dict | None = None,
+               catalog: "_Catalog | None" = None) -> DataFrame:
+        """The one way a query AST becomes a DataFrame: the statement's
+        lazy catalog (``overrides`` shadow its entries, as a
+        materialized view's inserted batch shadows its source table)
+        plus the session's settings, UDFs, dictionaries and
+        parameterized views. A view body passes its own ``catalog``; it
+        is a subquery of the statement that names it, so the
+        result-only settings (limit, offset, max_result_rows) stay with
+        that statement."""
+        settings = self.settings
+        if catalog is None:
+            catalog = _Catalog(self, (self.current_db,))
+        else:
+            settings = {k: v for k, v in settings.items()
+                        if k not in _RESULT_SETTINGS}
+        tables = ChainMap(overrides, catalog) if overrides else catalog
+        return build(self.spark, ast, tables, self._engines(),
+                     params=params, settings=settings, udfs=self.udfs,
+                     dictionaries=self.dictionaries,
+                     views=self._param_views())
+
     def _read(self, meta: TableMeta,
               _resolving: frozenset = frozenset()) -> DataFrame:
         if meta.is_view:
-            # Resolve ONLY the tables the view's query actually
-            # references (AST walk): eager whole-catalog materialization
-            # would re-build every sibling view per view — quadratic at
-            # best, infinitely recursive between any two views. The
-            # in-flight set turns genuine cycles into a named error.
+            # bare names in the body resolve in the view's database,
+            # then in default; the in-flight set turns a cycle into a
+            # named error
             key = (meta.database, meta.name)
             if key in _resolving:
                 raise ValueError(
                     f"circular view reference involving {meta.name}")
-            names, dynamic = _referenced_table_names(meta.view_query)
-            stack = _resolving | {key}
-            if dynamic:
-                # merge()-style dynamic references: fall back to the
-                # full catalog minus the in-flight views
-                tables = self._tables_except(meta.name, meta.database,
-                                             stack)
-            else:
-                tables = {}
-                for dbn, t in names:
-                    cand = ((dbn, t),)
-                    if dbn is None:
-                        cand = ((meta.database, t), ("default", t))
-                    for cdb, ct in cand:
-                        m2 = (self._db(cdb).get(ct)
-                              if cdb in self.databases else None)
-                        if m2 is None:
-                            continue
-                        if (m2.database, m2.name) in stack:
-                            raise ValueError(
-                                f"circular view reference involving "
-                                f"{meta.name}")
-                        k = ct if dbn is None else f"{dbn}.{ct}"
-                        tables[k] = self._read(m2, stack)
-                        break
-                if any(dbn == "system" for dbn, _t in names):
-                    tables.update(self._system_tables())
-            return build(self.spark, meta.view_query, tables,
-                         self._engines())
+            return self._build(meta.view_query, catalog=_Catalog(
+                self, (meta.database, "default"), _resolving | {key}))
         if meta.memory_df is not None:
             return meta.memory_df
         if meta.bucket_spec() is not None and meta.path:
@@ -620,13 +653,6 @@ class ChSession:
                 df = df.select(*declared)
             return df
         return self.spark.createDataFrame([], meta.spark_schema())
-
-    def _tables_except(self, skip: str, db: str | None = None,
-                       _resolving: frozenset = frozenset()
-                       ) -> dict[str, DataFrame]:
-        return {n: self._read(m, _resolving)
-                for n, m in self._db(db).items()
-                if n != skip and (m.database, m.name) not in _resolving}
 
     # --- DDL --------------------------------------------------------------
 
@@ -680,12 +706,9 @@ class ChSession:
             meta.settings["sum_cols"] = list(node.engine_args)
         source: DataFrame | None = None
         if node.as_select is not None:
-            source = build(self.spark, node.as_select, self._tables(),
-                           self._engines())
+            source = self._build(node.as_select)
             if not meta.columns:
-                meta.columns = [(f.name,
-                                 _spark_to_ch(f.dataType.simpleString()))
-                                for f in source.schema.fields]
+                meta.columns = _ch_columns(source)
         elif node.as_table is not None:
             src_meta = self._resolve(None, node.as_table)
             meta.columns = list(src_meta.columns)
@@ -733,8 +756,7 @@ class ChSession:
             # POPULATE additionally backfills the data present at
             # creation; without it the view starts EMPTY.
             from .plans.ast_nodes import Star, TableRef
-            df = build(self.spark, node.query, self._tables(),
-                       self._engines())
+            df = self._build(node.query)
             if node.to_table:
                 # TO target: rows land in an existing table; the view
                 # name reads from it
@@ -744,15 +766,12 @@ class ChSession:
                     is_view=True,
                     view_query=SelectQuery(
                         select=[Star()],
-                        # bare name: view reads resolve through
-                        # _tables_except, which keys unqualified
-                        from_=TableRef(None, tmeta.name)))
+                        from_=TableRef(tmeta.database, tmeta.name)))
                 target_db, target_table = tmeta.database, tmeta.name
             else:
                 meta = TableMeta(
                     node.name, db,
-                    [(f.name, _spark_to_ch(f.dataType.simpleString()))
-                     for f in df.schema.fields],
+                    _ch_columns(df),
                     engine="MergeTree",
                     path=os.path.join(self.warehouse, db, node.name))
                 self._write(meta, df if node.populate
@@ -1543,9 +1562,7 @@ class ChSession:
                         for row in node.values]
                 ast = (sels[0] if len(sels) == 1
                        else _UQ(sels, ["all"] * (len(sels) - 1)))
-                source = build(self.spark, ast, self._tables(),
-                               self._engines(), settings=self.settings,
-                               udfs=self.udfs)
+                source = self._build(ast)
         elif node.infile is not None or node.format_data is not None:
             from .sources import read_format
 
@@ -1617,9 +1634,7 @@ class ChSession:
                 source = source.withColumn(
                     cname, F.from_json(lit, target_t))
         else:
-            source = build(self.spark, node.select, self._tables(),
-                           self._engines(), settings=self.settings,
-                           udfs=self.udfs, views=self._param_views())
+            source = self._build(node.select)
             source = source.toDF(*cols)
         # missing columns get their declared DEFAULT / MATERIALIZED /
         # ALIAS expression (evaluated over the supplied columns;
@@ -1689,11 +1704,9 @@ class ChSession:
             if (mv["src_db"], mv["src_table"]) != (src_meta.database,
                                                    src_meta.name):
                 continue
-            tables = self._tables()
-            tables[mv["src_table"]] = batch
-            tables[f"{src_meta.database}.{src_meta.name}"] = batch
-            out = build(self.spark, mv["query"], tables, self._engines(),
-                        settings=self.settings, udfs=self.udfs)
+            out = self._build(mv["query"], overrides={
+                mv["src_table"]: batch,
+                f"{src_meta.database}.{src_meta.name}": batch})
             tmeta = self._resolve(mv["target_db"], mv["target_table"])
             out = out.select(*[
                 F.col(f"`{n}`").cast(ch_type_to_spark(t)).alias(n)
@@ -1741,27 +1754,19 @@ class ChSession:
     def _parts_rows(self) -> list[tuple]:
         """system.parts analogue: one row per parquet data file of every
         warehouse-backed table (rows from the parquet footer — metadata
-        only, cached per (path, mtime), no data pages read)."""
-        cache = getattr(self, "_parts_cache", {})
-        self._parts_cache = cache
+        only, no data pages read)."""
+        import pyarrow.parquet as pq
         rows: list[tuple] = []
-        for db in sorted(self.databases):
-            for name, meta in sorted(self._db(db).items()):
-                if not meta.path or not os.path.exists(meta.path):
-                    continue
-                for root, _dirs, files in os.walk(meta.path):
-                    for f in sorted(files):
-                        if not f.endswith(".parquet"):
-                            continue
+        for db, name, meta in _metas(self):
+            if not meta.path or not os.path.exists(meta.path):
+                continue
+            for root, _dirs, files in os.walk(meta.path):
+                for f in sorted(files):
+                    if f.endswith(".parquet"):
                         p = os.path.join(root, f)
-                        st = os.stat(p)
-                        key = (p, st.st_mtime_ns)
-                        if key not in cache:
-                            import pyarrow.parquet as pq
-                            cache[key] = pq.ParquetFile(p).metadata.num_rows
-                        rel = os.path.relpath(p, meta.path)
-                        rows.append((db, name, rel, cache[key],
-                                     st.st_size, True))
+                        rows.append((db, name, os.path.relpath(p, meta.path),
+                                     pq.ParquetFile(p).metadata.num_rows,
+                                     os.path.getsize(p), True))
         return rows
 
     def _catalog_name(self, meta: TableMeta) -> str:
@@ -1976,13 +1981,11 @@ class ChSession:
             # DESCRIBE (SELECT ...): the query's result schema, Spark
             # types rendered in CH spelling where the inverse map knows
             # them
-            df = build(self.spark, node.query, self._tables(),
-                       self._engines(), settings=self.settings,
-                       udfs=self.udfs, views=self._param_views())
+            df = self._build(node.query)
             u64 = getattr(df, "_ch_uint64_cols", frozenset())
             rows = [(f.name,
                      "UInt64" if f.name in u64
-                     else _spark_type_to_ch(f.dataType.simpleString()),
+                     else spark_type_to_ch(f.dataType.simpleString()),
                      "", "", "", "", "") for f in df.schema.fields]
             return self.spark.createDataFrame(
                 rows, "name string, type string, default_type string, "
@@ -2121,8 +2124,7 @@ class ChSession:
             from .plans.format_sql import format_sql
             text = format_sql(node.query, one_line=False)
         else:
-            df = build(self.spark, node.query, self._tables(),
-                       self._engines(), views=self._param_views())
+            df = self._build(node.query)
             mode = {"PLAN": "extended",
                     "PIPELINE": "formatted"}[node.kind]
             try:
@@ -2214,10 +2216,7 @@ class ChSession:
     def _output_inner(self, node: OutputClause):
         inner = node.query
         if isinstance(inner, (SelectQuery, UnionQuery)):
-            df = build(self.spark, inner, self._tables(), self._engines(),
-                       settings=self.settings, udfs=self.udfs,
-                       dictionaries=self.dictionaries,
-                       views=self._param_views())
+            df = self._build(inner)
         else:
             df = self._dispatch_node(inner)
             if df is None or not hasattr(df, "columns"):
@@ -2311,9 +2310,7 @@ class ChSession:
         from .plans.ast_nodes import Literal as _Lit
         tf = node.function
         if node.select is not None:
-            src = build(self.spark, node.select, self._tables(),
-                        self._engines(), settings=self.settings,
-                        udfs=self.udfs)
+            src = self._build(node.select)
         else:
             rows = []
             from .plans.builder import Context as _BCtx
@@ -2474,8 +2471,7 @@ class ChSession:
                 f"BACKUP_NOT_FOUND: backup '{path}' does not exist")
         df = self.spark.read.parquet(path)
         meta = TableMeta(table, db,
-                         [(f.name, _spark_to_ch(f.dataType.simpleString()))
-                          for f in df.schema.fields],
+                         _ch_columns(df),
                          engine="MergeTree",
                          path=os.path.join(self.warehouse, db, table))
         self._write(meta, df, mode="overwrite")
@@ -2483,6 +2479,12 @@ class ChSession:
 
     def _ok(self):
         return self.spark.createDataFrame([(0,)], "ok int")
+
+
+def _ch_columns(df: DataFrame) -> list[tuple[str, str]]:
+    """(name, CH type) for each column of a DataFrame's schema."""
+    return [(f.name, spark_type_to_ch(f.dataType.simpleString()))
+            for f in df.schema.fields]
 
 
 def _partition_column(node: CreateTable) -> tuple[str | None, object | None]:
@@ -2530,74 +2532,6 @@ def _literal_py(node):
         items = [_literal_py(i) for i in node.args]
         return dict(zip(items[0::2], items[1::2]))
     raise ValueError(f"INSERT VALUES supports literals, got {node}")
-
-
-def _referenced_table_names(node) -> tuple[set, bool]:
-    """(db_or_None, table) pairs a query's AST references — TableRefs,
-    view()/IN-table forms, subqueries — plus a flag for dynamic table
-    functions (merge()) whose reference set is pattern-driven."""
-    from .plans.ast_nodes import (FuncCall, Identifier, Join, Subquery,
-                                  SubqueryRef, TableFunction, TableRef)
-    names: set = set()
-    dynamic = False
-
-    def walk(n):
-        nonlocal dynamic
-        if n is None or isinstance(n, (str, int, float, bool, bytes)):
-            return
-        if isinstance(n, (list, tuple)):
-            for x in n:
-                walk(x)
-            return
-        if isinstance(n, TableRef):
-            names.add((n.database, n.table))
-            return
-        if isinstance(n, (SubqueryRef, Subquery)):
-            walk(n.query)
-            return
-        if isinstance(n, TableFunction):
-            if n.name.lower() == "merge":
-                dynamic = True
-            walk(n.args)
-            return
-        if isinstance(n, Join):
-            walk(n.left)
-            walk(n.right)
-            walk(n.on)
-            return
-        if isinstance(n, FuncCall):
-            if (n.name in ("in", "notIn", "globalIn", "globalNotIn")
-                    and len(n.args) == 2
-                    and isinstance(n.args[1], Identifier)):
-                # x IN table form
-                names.add((None, n.args[1].name))
-            walk(n.args)
-            walk(n.params)
-            if n.filter_where is not None:
-                walk(n.filter_where)
-            return
-        for f in getattr(n, "__dataclass_fields__", {}):
-            walk(getattr(n, f))
-    walk(node)
-    return names, dynamic
-
-
-def _spark_type_to_ch(spark_t: str) -> str:
-    """CH spelling of a Spark result type for DESCRIBE (SELECT ...)."""
-    from .functions.typemap import spark_type_to_ch_numeric
-    num = spark_type_to_ch_numeric(spark_t)
-    if num:
-        return num
-    base = {"string": "String", "boolean": "UInt8", "date": "Date",
-            "timestamp": "DateTime", "timestamp_ntz": "DateTime",
-            "binary": "String"}.get(spark_t)
-    if base:
-        return base
-    if spark_t.startswith("array<"):
-        return f"Array({_spark_type_to_ch(spark_t[6:-1])})"
-    if spark_t.startswith("decimal"):
-        return "Decimal" + spark_t[7:]
-    return spark_t
 
 
 def _split_json_objects(text: str) -> list[str]:
@@ -2728,19 +2662,3 @@ def _type_default_py(ch_type: str):
     if spark_t == "boolean":
         return False
     return None
-
-
-def _spark_to_ch(simple: str) -> str:
-    table = {"bigint": "Int64", "int": "Int32", "smallint": "Int16",
-             "tinyint": "Int8", "double": "Float64", "float": "Float32",
-             "string": "String", "date": "Date", "timestamp": "DateTime",
-             "boolean": "Bool", "binary": "String"}
-    if simple in table:
-        return table[simple]
-    m = re.match(r"array<(.+)>$", simple)
-    if m:
-        return f"Array({_spark_to_ch(m.group(1))})"
-    m = re.match(r"decimal\((\d+),(\d+)\)$", simple)
-    if m:
-        return f"Decimal({m.group(1)},{m.group(2)})"
-    return "String"

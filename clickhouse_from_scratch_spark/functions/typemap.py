@@ -133,6 +133,39 @@ def ch_type_to_spark(ch: str) -> str:
     raise ValueError(f"unmapped ClickHouse type: {ch}")
 
 
+_SPARK_TO_CH = {
+    "tinyint": "Int8", "smallint": "Int16", "int": "Int32",
+    "bigint": "Int64", "float": "Float32", "double": "Float64",
+    "string": "String", "binary": "String", "boolean": "Bool",
+    "date": "Date", "timestamp": "DateTime", "timestamp_ntz": "DateTime",
+}
+
+
+def spark_type_to_ch(spark_type: str) -> str:
+    """ClickHouse spelling of a Spark type name (``simpleString()``),
+    the inverse of ch_type_to_spark: what DESCRIBE, system.columns,
+    toTypeName and CREATE TABLE ... AS SELECT report. A type with no
+    ClickHouse counterpart reads as String."""
+    t = spark_type.strip()
+    if t in _SPARK_TO_CH:
+        return _SPARK_TO_CH[t]
+    if t.startswith("array<") and t.endswith(">"):
+        return f"Array({spark_type_to_ch(t[6:-1])})"
+    m = re.match(r"decimal\((\d+),\s*(\d+)\)$", t)
+    if m:
+        return f"Decimal({m.group(1)}, {m.group(2)})"
+    if t.startswith("struct<") and t.endswith(">"):
+        elems = [spark_type_to_ch(p.split(":", 1)[1])
+                 for p in _split_args(t[7:-1], "<>") if ":" in p]
+        return f"Tuple({', '.join(elems)})"
+    if t.startswith("map<") and t.endswith(">"):
+        kv = _split_args(t[4:-1], "<>")
+        if len(kv) == 2:
+            return (f"Map({spark_type_to_ch(kv[0])}, "
+                    f"{spark_type_to_ch(kv[1])})")
+    return "String"
+
+
 # --- ClickHouse numeric type algebra ---------------------------------------
 #
 # Two distinct rule-sets in the reference, both ported here:
@@ -314,13 +347,13 @@ def least_supertype(types: list[str]) -> str:
         f"there is no supertype for types {', '.join(uniq)}")
 
 
-def _split_args(s: str) -> list[str]:
-    """Split on top-level commas (respects nested parens)."""
+def _split_args(s: str, brackets: str = "()") -> list[str]:
+    """Split on top-level commas (respects nested brackets)."""
     out, depth, cur = [], 0, []
     for ch_ in s:
-        if ch_ == "(":
+        if ch_ == brackets[0]:
             depth += 1
-        elif ch_ == ")":
+        elif ch_ == brackets[1]:
             depth -= 1
         if ch_ == "," and depth == 0:
             out.append("".join(cur))

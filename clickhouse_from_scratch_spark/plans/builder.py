@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import os
 import re as _re_mod
+from collections import ChainMap
+from collections.abc import Mapping
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
@@ -27,7 +29,8 @@ from ..functions import REGISTRY, ch
 from ..functions.aggregates import AGGREGATES, resolve_aggregate
 from ..functions.typemap import (
     CH_NUMERIC, arithmetic_result_type, ch_literal_type, ch_type_to_spark,
-    least_supertype, negate_result_type, spark_type_to_ch_numeric,
+    least_supertype, negate_result_type, spark_type_to_ch,
+    spark_type_to_ch_numeric,
     NoCommonTypeError,
 )
 from ..operators import (
@@ -119,7 +122,9 @@ def _enforce_row_cap(df: DataFrame, cap: int, mode: str,
 @dataclass
 class Context:
     spark: SparkSession
-    tables: dict[str, DataFrame]
+    # CTE and alias registrations go into the front map of this chain,
+    # so a scope never copies (or builds) the entries behind it
+    tables: Mapping[str, DataFrame]
     aliases: dict[str, object] = field(default_factory=dict)   # name → AST
     lambda_params: dict[str, Column] = field(default_factory=dict)
     columns: list[str] = field(default_factory=list)
@@ -168,8 +173,13 @@ class Context:
     # .attr_ch_type()/.attr_default() (duck-typed; lives in ddl.DictMeta)
     dictionaries: dict[str, object] = field(default_factory=dict)
 
+    def __post_init__(self):
+        if not isinstance(self.tables, ChainMap):
+            self.tables = ChainMap(self.tables)
+
     def child(self) -> "Context":
-        return Context(self.spark, dict(self.tables), dict(self.aliases),
+        return Context(self.spark, self.tables.new_child(),
+                       dict(self.aliases),
                        engines=self.engines, params=self.params,
                        settings=self.settings, udfs=self.udfs,
                        dictionaries=self.dictionaries,
@@ -224,14 +234,14 @@ def check_pinned_settings(settings: dict) -> None:
 
 
 def build(spark: SparkSession, q: SelectQuery | UnionQuery,
-          tables: dict[str, DataFrame],
+          tables: Mapping[str, DataFrame],
           engines: dict[str, dict] | None = None,
           params: dict[str, object] | None = None,
           settings: dict[str, object] | None = None,
           udfs: dict[str, object] | None = None,
           dictionaries: dict[str, object] | None = None,
           views: dict[str, object] | None = None) -> DataFrame:
-    ctx = Context(spark, dict(tables), engines=engines or {},
+    ctx = Context(spark, ChainMap({}, tables), engines=engines or {},
                   params=params or {}, settings=settings or {},
                   udfs=udfs or {}, dictionaries=dictionaries or {},
                   view_asts=views or {})
@@ -313,8 +323,8 @@ def _build_query(q, ctx: Context) -> DataFrame:
             ctx = ctx.child()
             for cte_name, cte_node in first_sel.ctes:
                 if isinstance(cte_node, (SelectQuery, UnionQuery)):
-                    ctx.tables.setdefault(cte_name,
-                                          _build_query(cte_node, ctx))
+                    if cte_name not in ctx.tables:
+                        ctx.tables[cte_name] = _build_query(cte_node, ctx)
                 else:
                     ctx.aliases.setdefault(cte_name, cte_node)
         # bare UNION (parsed mode "") resolves from union_default_mode
@@ -1039,7 +1049,8 @@ def _build_from(node, ctx: Context) -> DataFrame:
             df = sample_by_key(df, key, frac, off)
         if node.alias:
             df = df.alias(node.alias)
-            ctx.tables.setdefault(node.alias, df)
+            if node.alias not in ctx.tables:
+                ctx.tables[node.alias] = df
         else:
             # CH allows qualification by the bare table name
             # (SELECT ta.v FROM ta) — register it as the frame alias
@@ -1049,7 +1060,8 @@ def _build_from(node, ctx: Context) -> DataFrame:
         df = _build_query(node.query, ctx)
         if node.alias:
             df = df.alias(node.alias)
-            ctx.tables.setdefault(node.alias, df)
+            if node.alias not in ctx.tables:
+                ctx.tables[node.alias] = df
         return df
     if isinstance(node, TableFunction):
         return _table_function(node, ctx)
@@ -4642,7 +4654,7 @@ def _call_fn(node: FuncCall, cols: list, ctx: Context,
         if t is None:
             dt_obj = _probe_dtype(arg, cols[0], ctx, df)
             if dt_obj is not None:
-                t = _spark_to_ch_name(dt_obj.simpleString())
+                t = spark_type_to_ch(dt_obj.simpleString())
         return F.lit(t or "Dynamic")
     if name == "initializeAggregation" and len(node.args) >= 2 \
             and isinstance(node.args[0], Literal):
@@ -5344,50 +5356,6 @@ def _infer_ch_type(node, ctx: Context, df: DataFrame | None,
             ta = _infer_ch_type(node.args[0], ctx, df, _seen)
             return negate_result_type(ta) if ta is not None else None
     return None
-
-
-_SPARK_TO_CH_NAME = {
-    "bigint": "Int64", "int": "Int32", "smallint": "Int16",
-    "tinyint": "Int8", "double": "Float64", "float": "Float32",
-    "string": "String", "date": "Date", "timestamp": "DateTime",
-    "timestamp_ntz": "DateTime", "boolean": "Bool", "binary": "String",
-}
-
-
-def _split_type_args(body: str) -> list[str]:
-    """Split 'int,struct<a:int,b:string>' at top-level commas."""
-    out, depth, cur = [], 0, []
-    for ch in body:
-        if ch == "<":
-            depth += 1
-        elif ch == ">":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur))
-    return out
-
-
-def _spark_to_ch_name(dt: str) -> str:
-    if dt.startswith("array<") and dt.endswith(">"):
-        return f"Array({_spark_to_ch_name(dt[6:-1])})"
-    if dt.startswith("decimal"):
-        # CH spells it with a space: Decimal(18, 4)
-        return "Decimal" + dt[7:].replace(",", ", ")
-    if dt.startswith("struct<") and dt.endswith(">"):
-        elems = [_spark_to_ch_name(p.split(":", 1)[1])
-                 for p in _split_type_args(dt[7:-1]) if ":" in p]
-        return f"Tuple({', '.join(elems)})"
-    if dt.startswith("map<") and dt.endswith(">"):
-        kv = _split_type_args(dt[4:-1])
-        if len(kv) == 2:
-            return (f"Map({_spark_to_ch_name(kv[0])}, "
-                    f"{_spark_to_ch_name(kv[1])})")
-    return _SPARK_TO_CH_NAME.get(dt, dt)
 
 
 def _refs_lambda_param(n, ctx: Context) -> bool:

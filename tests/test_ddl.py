@@ -1007,3 +1007,99 @@ def test_show_create_renders_column_attributes(spark):
     assert "`b` String DEFAULT 'x'" in stmt
     assert "`m` Int32 MATERIALIZED" in stmt and "plus(a, 1)" in stmt
     assert "`e` String EPHEMERAL" in stmt
+
+
+def test_dangling_view_fails_only_where_named(sess):
+    """A statement resolves only the tables it names: a view over a
+    dropped table breaks reads of that view, not every statement."""
+    sess.execute("CREATE TABLE t (a Int64) ENGINE = MergeTree ORDER BY a")
+    sess.execute("CREATE VIEW v AS SELECT a FROM t")
+    sess.execute("DROP TABLE t")
+    assert sess.execute("SELECT 1 AS x").collect()[0].x == 1
+    with pytest.raises(Exception, match=r"unknown table: t$"):
+        sess.execute("SELECT * FROM v")
+
+
+def test_udf_in_view_ctas_and_explain(sess):
+    sess.execute("CREATE FUNCTION plus1 AS (x) -> x + 1")
+    sess.execute("CREATE VIEW pv AS SELECT plus1(number) AS y "
+                 "FROM numbers(3)")
+    assert sorted(r.y for r in sess.execute("SELECT y FROM pv").collect()) \
+        == [1, 2, 3]
+    sess.execute("CREATE TABLE pc ENGINE = Memory AS "
+                 "SELECT plus1(number) AS y FROM numbers(2)")
+    assert sorted(r.y for r in sess.execute("SELECT y FROM pc").collect()) \
+        == [1, 2]
+    plan = "\n".join(r.explain for r in sess.execute(
+        "EXPLAIN PLAN SELECT plus1(41) AS z").collect())
+    assert "Logical Plan" in plan and "42" in plan
+    assert sess.execute("SELECT 1 AS x").collect()[0].x == 1
+
+
+def test_view_cycle_is_a_named_error(sess):
+    sess.execute("CREATE TABLE base (a Int64) ENGINE = Memory")
+    sess.execute("CREATE VIEW v1 AS SELECT a FROM base")
+    sess.execute("CREATE VIEW v2 AS SELECT a FROM v1")
+    sess.execute("CREATE OR REPLACE VIEW v1 AS SELECT a FROM v2")
+    with pytest.raises(Exception, match="circular view reference"):
+        sess.execute("SELECT * FROM v1")
+    assert sess.execute("SELECT count() AS n FROM base").collect()[0].n == 0
+
+
+def test_result_settings_shape_only_the_statement_result(sess):
+    """A view body is a subquery of the statement that names it: the
+    limit setting cuts the statement's result, not the view's rows."""
+    sess.execute("CREATE TABLE r (a Int64) ENGINE = Memory")
+    sess.execute("INSERT INTO r VALUES (1), (2), (3)")
+    sess.execute("CREATE VIEW rv AS SELECT a FROM r")
+    sess.execute("SET limit = 2")
+    assert sess.execute("SELECT sum(a) AS s FROM rv").collect()[0].s == 6
+    assert len(sess.execute("SELECT a FROM rv").collect()) == 2
+
+
+def test_statement_builds_only_named_system_tables(sess, monkeypatch):
+    from clickhouse_from_scratch_spark import ddl
+    built = []
+
+    def counted(name, rows):
+        return lambda s: built.append(name) or rows(s)
+
+    for name, (schema, rows) in list(ddl._SYSTEM_TABLES.items()):
+        monkeypatch.setitem(ddl._SYSTEM_TABLES, name,
+                            (schema, counted(name, rows)))
+    sess.execute("CREATE TABLE u (a Int64) ENGINE = Memory")
+    sess.execute("INSERT INTO u VALUES (1)")
+    assert sess.execute("SELECT a FROM u").collect()[0].a == 1
+    assert built == []
+    names = [r.name for r in sess.execute(
+        "SELECT name FROM system.tables").collect()]
+    assert names == ["u"] and built == ["tables"]
+
+
+def test_timestamp_ntz_column_reports_datetime(sess, spark):
+    df = spark.sql("SELECT TIMESTAMP_NTZ '2024-01-02 03:04:05' AS ts, "
+                   "1 AS k")
+    sess.register_external("ntz", df)
+    cols = {r.name: r.type for r in sess.execute(
+        "SELECT name, type FROM system.columns "
+        "WHERE table = 'ntz'").collect()}
+    assert cols == {"ts": "DateTime", "k": "Int32"}
+    desc = {r.name: r.type for r in sess.execute(
+        "DESCRIBE TABLE ntz").collect()}
+    assert desc == {"ts": "DateTime", "k": "Int32"}
+
+
+def test_default_warehouse_is_private(spark, tmp_path, monkeypatch):
+    import gc
+    import os
+    monkeypatch.chdir(tmp_path)
+    s = ChSession(spark)
+    s.execute("CREATE TABLE w (a Int64) ENGINE = MergeTree ORDER BY a")
+    s.execute("INSERT INTO w VALUES (1)")
+    df = s.execute("SELECT a FROM w")
+    assert os.path.isdir(os.path.join(s.warehouse, "default", "w"))
+    assert os.listdir(tmp_path) == []
+    # the frame still reads after its session is gone
+    del s
+    gc.collect()
+    assert [r.a for r in df.collect()] == [1]

@@ -6,7 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_from_scratch_spark.functions import REGISTRY, ch, has_function
-from clickhouse_from_scratch_spark.functions.typemap import ch_type_to_spark
+from clickhouse_from_scratch_spark.functions.typemap import (
+    ch_type_to_spark, spark_type_to_ch,
+)
 
 
 def _one(spark, col, **kwargs):
@@ -112,6 +114,20 @@ def test_missing_function_raises():
 ])
 def test_type_mapping(ch_type, spark_type):
     assert ch_type_to_spark(ch_type) == spark_type
+
+
+@pytest.mark.parametrize("spark_type,ch_type", [
+    ("bigint", "Int64"), ("smallint", "Int16"), ("double", "Float64"),
+    ("string", "String"), ("binary", "String"), ("date", "Date"),
+    ("timestamp", "DateTime"), ("timestamp_ntz", "DateTime"),
+    ("boolean", "Bool"), ("decimal(10,2)", "Decimal(10, 2)"),
+    ("array<int>", "Array(Int32)"),
+    ("map<string,bigint>", "Map(String, Int64)"),
+    ("struct<a:tinyint,b:array<string>>", "Tuple(Int8, Array(String))"),
+    ("interval day to second", "String"),
+])
+def test_spark_type_mapping(spark_type, ch_type):
+    assert spark_type_to_ch(spark_type) == ch_type
 
 
 def test_type_mapping_unmapped():
